@@ -16,11 +16,7 @@ scratch location, then rewrite ONLY the touched month partitions with
 Spark's dynamic partition overwrite — the ``replaceWhere`` equivalent
 without Delta. No whole-table directory rename (impossible on S3/GCS)
 and the table root never disappears; the commit granularity is one
-month partition. For the non-partitioned index/tagged tables the final
-step is a plain committed overwrite of the table files — readers can
-see the swap mid-commit there; at scale, prefer month-partitioned
-layouts (or a transactional table format) for anything compacted while
-being read.
+month partition.
 """
 
 from __future__ import annotations

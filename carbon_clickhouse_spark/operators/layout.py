@@ -1,14 +1,20 @@
-"""Table directory layout probing and one-time flat->partitioned migration.
+"""The table-directory writer: one month-partitioned append for every
+table of the four-table root, plus the flat->partitioned migration.
 
-Round 7 month-partitioned the index/tagged tables (mirroring the
-reference's ``PARTITION BY toYYYYMM(Date)`` DDL, e.g.
-``carbon-clickhouse.go`` docs / README index DDL). A table written by
-an OLDER build, though, is flat parquet — and Spark's parquet reader,
-pointed at a directory that mixes flat data files with ``month=``
-partition directories, silently returns ONLY the partitioned rows
-(partition discovery wins and the flat files are never listed). An
-unguarded partitioned append onto a legacy table therefore hides all
-pre-upgrade history from every reader with no error.
+Every table of the contract is ``month=``-partitioned (the reference's
+``PARTITION BY toYYYYMM(Date)`` DDL), and every writer — the batch
+``pipeline.write_tables``, the bulk ``pipeline.ingest_and_store`` and
+the streaming micro-batch — goes through :func:`append_table`, which
+holds the only copy of the write rules (emptiness, layout guard,
+sort order, memo).
+
+A FLAT table directory comes only from an older build (before
+index/tagged were partitioned) or from a hand-written dir. Spark's
+parquet reader, pointed at a directory that mixes flat data files with
+``month=`` partition directories, silently returns ONLY the
+partitioned rows (partition discovery wins and the flat files are
+never listed). An unguarded partitioned append onto such a table
+therefore hides all of its history from every reader with no error.
 
 The guard here is the missing probe: before a partitioned append,
 :func:`prepare_partitioned_append` classifies the target's layout and
@@ -17,10 +23,9 @@ The guard here is the missing probe: before a partitioned append,
 * ``flat`` — migrate ONCE (rewrite the flat rows into their
   ``month=`` partitions, then delete the flat files), after which the
   table is a normal partitioned table forever;
-* ``mixed`` — the damage case (an unguarded pre-fix append already
-  happened, or a migration crashed mid-way): the still-hidden flat
-  files are folded into partitions the same way, RECOVERING the
-  hidden rows;
+* ``mixed`` — the damage case (an unguarded append already happened,
+  or a migration crashed mid-way): the still-hidden flat files are
+  folded into partitions the same way, RECOVERING the hidden rows;
 * flat with no ``date`` column — cannot be month-partitioned; the
   caller is told to write flat to match (legacy ``tree``-shaped
   tables, whose engine-derived frames are equally date-less, so the
@@ -40,9 +45,9 @@ way, ``uploader/upload.go`` retry loop), strictly better than the
 silent loss it replaces.
 
 At 100 TB: the probe is one ``listStatus`` RPC per table per process
-(memoized after the first ``partitioned`` answer), and the migration
-cost is one read+write of the legacy table — paid once at upgrade,
-never per batch.
+(memoized once the table is known partitioned with rows), and the
+migration cost is one read+write of the legacy table — paid once at
+upgrade, never per batch.
 """
 
 from __future__ import annotations
@@ -54,17 +59,22 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 __all__ = [
+    "append_table",
     "table_layout",
     "prepare_partitioned_append",
     "migrate_flat_to_partitioned",
     "forget_layout",
 ]
 
-# tables confirmed month-partitioned (or freshly created) this process:
-# their layout can only stay partitioned, so skip the per-batch RPC.
-# _KNOWN_FLAT memoizes the opposite verdict — a stored date-less flat
-# table stays flat, and re-probing (plus re-pinning the batch frame)
-# every micro-batch would tax the hot path for nothing
+# tables known month-partitioned WITH rows this process (a non-empty
+# partitioned write landed, or the probe found month= dirs): their
+# layout can only stay partitioned and an empty append to them writes
+# no data files (the dynamic-partition writer creates files on first
+# row), so append_table skips both the layout RPC and the head(1)
+# emptiness probe. _KNOWN_FLAT memoizes the opposite verdict — a
+# stored date-less flat table stays flat, and re-probing (plus
+# re-pinning the batch frame) every micro-batch would tax the hot path
+# for nothing
 _KNOWN_PARTITIONED: set[str] = set()
 _KNOWN_FLAT: set[str] = set()
 _KNOWN_LOCK = threading.Lock()
@@ -139,6 +149,23 @@ def _flat_data_files(spark: SparkSession, path: str) -> list[str]:
     ]
 
 
+def _write_partitioned(
+    df: DataFrame, path: str, sort_cols, mode: str = "append"
+) -> None:
+    """The contract's physical layout: ``month`` = ``yyyyMM`` of
+    ``date``, rows sorted ``(month, *sort_cols)`` within each task so
+    parquet min/max stats skip along the primary key like the CH
+    ORDER BY key."""
+    cols = [c for c in sort_cols if c in df.columns]
+    (
+        df.withColumn("month", F.date_format("date", "yyyyMM"))
+        .sortWithinPartitions("month", *cols)
+        .write.mode(mode)
+        .partitionBy("month")
+        .parquet(path)
+    )
+
+
 def migrate_flat_to_partitioned(
     spark: SparkSession, path: str, sort_cols: tuple[str, ...] = ("path",)
 ) -> bool:
@@ -157,14 +184,7 @@ def migrate_flat_to_partitioned(
     df = spark.read.parquet(*flat)
     if "date" not in df.columns:
         return False
-    cols = [c for c in sort_cols if c in df.columns]
-    (
-        df.withColumn("month", F.date_format("date", "yyyyMM"))
-        .sortWithinPartitions("month", *cols)
-        .write.mode("append")
-        .partitionBy("month")
-        .parquet(path)
-    )
+    _write_partitioned(df, path, sort_cols)
     fs, _ = _fs_and_path(spark, path)
     jvm = spark._jvm
     for f in flat:
@@ -215,6 +235,92 @@ def prepare_partitioned_append(
             if pin is not None:
                 pinned = pin.localCheckpoint(eager=True)
             ok = migrate_flat_to_partitioned(spark, path, sort_cols)
-    with _KNOWN_LOCK:
-        (_KNOWN_PARTITIONED if ok else _KNOWN_FLAT).add(key)
+    # a missing or just-migrated table may hold no rows: only the
+    # caller's non-empty partitioned write (append_table) marks it
+    if layout == "partitioned" or not ok:
+        with _KNOWN_LOCK:
+            (_KNOWN_PARTITIONED if ok else _KNOWN_FLAT).add(key)
     return ok, pinned
+
+
+def append_table(
+    df: DataFrame, path: str, sort_cols: tuple[str, ...], mode: str = "append"
+) -> DataFrame:
+    """Write ``df`` to the table at ``path`` in the contract layout —
+    the one writer behind every table write of the batch, bulk and
+    streaming paths (callers sharing a table across threads hold its
+    lock around the call).
+
+    * an empty frame writes nothing: a partitioned write of no rows
+      leaves a directory holding only ``_SUCCESS``, which
+      ``spark.read.parquet`` cannot infer a schema from (readers treat
+      a missing table as empty). An append decides that with a
+      ``head(1)`` probe, run only while the table is not known
+      partitioned with rows — after that (the streaming steady state)
+      an empty append simply writes no data files. An overwrite needs
+      no probe: it truncates, and a ``_SUCCESS``-only result is then
+      deleted (one listing, not a second evaluation of the frame).
+    * before appending onto a flat dir (older build / hand-written),
+      :func:`prepare_partitioned_append` migrates it, pinning ``df``
+      first because its plan may read the files being migrated (the
+      A2 anti-join). A date-less frame, or a date-less flat dir, is
+      written flat to match.
+    * a failed write drops the memo (:func:`forget_layout`): the dir
+      may be in any state, so the next append re-probes.
+
+    Returns the frame written — ``df``, or its pinned copy when a
+    migration ran; anything reading the rows after the write (the
+    ClickHouse mirror) must use it."""
+    spark = df.sparkSession
+    key = _memo_key(path)
+    partitioned = "date" in df.columns
+    if mode == "overwrite":
+        forget_layout(path)  # the whole dir is replaced
+    else:
+        with _KNOWN_LOCK:
+            known = partitioned and key in _KNOWN_PARTITIONED
+        if not known and not df.head(1):
+            return df
+        if partitioned:
+            partitioned, pinned = prepare_partitioned_append(
+                spark, path, sort_cols, pin=df
+            )
+            if pinned is not None:
+                df = pinned
+    try:
+        if partitioned:
+            _write_partitioned(df, path, sort_cols, mode)
+        else:
+            df.sortWithinPartitions(*sort_cols).write.mode(mode).parquet(path)
+    except Exception:
+        forget_layout(path)
+        raise
+    if partitioned:
+        if mode == "overwrite" and table_layout(spark, path) == "missing":
+            fs, jpath = _fs_and_path(spark, path)
+            fs.delete(jpath, True)
+        else:
+            with _KNOWN_LOCK:
+                _KNOWN_PARTITIONED.add(key)
+    return df
+    if mode == "overwrite":
+        # replaces the whole dir: any earlier verdict is void
+        forget_layout(path)
+    elif partitioned:
+        partitioned, pinned = prepare_partitioned_append(
+            spark, path, sort_cols, pin=df
+        )
+        if pinned is not None:
+            df = pinned
+    try:
+        if partitioned:
+            _write_partitioned(df, path, sort_cols, mode)
+        else:
+            df.sortWithinPartitions(*sort_cols).write.mode(mode).parquet(path)
+    except Exception:
+        forget_layout(path)
+        raise
+    if partitioned:
+        with _KNOWN_LOCK:
+            _KNOWN_PARTITIONED.add(key)
+    return df

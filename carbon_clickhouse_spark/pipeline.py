@@ -16,9 +16,9 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .operators.dedup import new_series_only
 from .operators.filters import drop_rule_predicate, ignored_patterns_predicate
 from .operators.index import build_index
+from .operators.layout import append_table, table_layout
 from .operators.tagged import build_tagged
 from .functions.paths import path_reverse
 
@@ -75,98 +75,32 @@ def derive_tables(points: DataFrame, config: IngestConfig | None = None) -> dict
     return tables
 
 
+def _sort_cols(table: str) -> tuple[str, ...]:
+    # the CH ORDER BY key: the series tables (index, tagged, legacy
+    # tree/series) sort by path alone
+    return ("path", "time") if table.startswith("points") else ("path",)
+
+
 def write_tables(
     tables: dict[str, DataFrame],
     root: str,
     mode: str = "append",
-    existing_index: DataFrame | None = None,
-    existing_tagged: DataFrame | None = None,
 ) -> None:
     """Persist the table set as month-partitioned parquet.
 
     Layout (SURVEY §1.4): partition by ``month(date)`` mirroring
     ClickHouse ``PARTITION BY toYYYYMM(Date)``; rows sorted within
     partitions by ``(path, time)`` so parquet min/max stats provide
-    data skipping along the primary key, like the CH ORDER BY key.
+    data skipping along the primary key, like the CH ORDER BY key
+    (:func:`operators.layout.append_table`; date-less legacy ``tree``
+    rows stay flat).
 
-    ``existing_index/tagged`` enable the A2 exists-cache: only series
-    not already present are appended.
+    For the A2 exists-cache, pass the index/tagged frames through
+    :func:`operators.dedup.new_series_only` against the stored tables
+    first: only series not already present are then appended.
     """
-    index_df, tagged_df = tables["index"], tables["tagged"]
-    if existing_index is not None:
-        index_df = new_series_only(index_df, existing_index, ["date", "level", "path"])
-    if existing_tagged is not None:
-        tagged_df = new_series_only(tagged_df, existing_tagged, ["date", "tag1", "path"])
-
-    def _write_month_partitioned(name, df, *sort_cols):
-        from .operators.layout import (
-            forget_layout,
-            prepare_partitioned_append,
-            table_layout,
-        )
-
-        path = os.path.join(root, name)
-        spark = df.sparkSession
-        # a PARTITIONED write of an EMPTY frame leaves a directory
-        # holding only _SUCCESS, which spark.read.parquet cannot infer
-        # a schema from — an empty table simply does not materialize
-        # (readers already treat a missing table dir as empty). With
-        # mode='overwrite' that must still TRUNCATE an existing table
-        # (a kept previous state would turn the truncation into a lie)
-        if not df.head(1):
-            if mode == "overwrite" and table_layout(spark, path) != "missing":
-                fs = spark._jvm.org.apache.hadoop.fs.Path(path).getFileSystem(
-                    spark._jsc.hadoopConfiguration()
-                )
-                fs.delete(spark._jvm.org.apache.hadoop.fs.Path(path), True)
-            return
-        # appending onto a pre-partitioning (flat) legacy table would
-        # make the directory mixed and HIDE the flat rows from every
-        # reader — migrate once (or, for date-less legacy shapes,
-        # match the stored flat layout). `pin=df` because the frame's
-        # plan may read the very files being migrated (A2 anti-join)
-        if mode == "append":
-            ok, pinned = prepare_partitioned_append(
-                spark, path, sort_cols, pin=df
-            )
-            if pinned is not None:
-                df = pinned
-            if not ok:
-                df.sortWithinPartitions(*sort_cols).write.mode(mode).parquet(
-                    path
-                )
-                return
-        try:
-            (
-                df.withColumn("month", F.date_format("date", "yyyyMM"))
-                .sortWithinPartitions("month", *sort_cols)
-                .write.mode(mode)
-                .partitionBy("month")
-                .parquet(path)
-            )
-        except Exception:
-            # a failed write may leave the dir in any state — drop
-            # the memoized layout so the next append re-probes
-            forget_layout(path)
-            raise
-
-    for name, df in (
-        ("points", tables["points"]),
-        ("points_reverse", tables["points_reverse"]),
-    ):
-        _write_month_partitioned(name, df, "path", "time")
-    # month(date) partitioning like the points tables — the
-    # reference's index/tagged DDL is PARTITION BY toYYYYMM(Date)
-    # too, and the A2 anti-join's date prune becomes structural
-    # partition pruning (tree rows all land in month(TREE_DATE))
-    for name, df in (("index", index_df), ("tagged", tagged_df)):
-        _write_month_partitioned(name, df, "path")
-    # legacy tree/series tables (index-shaped: series rows, no points)
-    for name in ("tree", "series", "series_reverse"):
-        if name in tables:
-            tables[name].sortWithinPartitions("path").write.mode(mode).parquet(
-                os.path.join(root, name)
-            )
+    for name, df in tables.items():
+        append_table(df, os.path.join(root, name), _sort_cols(name), mode)
 
 
 def write_tables_bucketed(
@@ -215,10 +149,9 @@ def ingest_and_store(
     points: DataFrame,
     root: str,
     config: IngestConfig | None = None,
-    exists_cache: bool = False,
 ) -> None:
-    """Bulk-load ingest order: write the points table ONCE, then
-    derive reverse/index/tagged from the freshly stored parquet.
+    """Bulk-load ingest order: append the points table ONCE, then
+    rebuild reverse/index/tagged from the freshly stored parquet.
 
     Recomputing a long points lineage per derived table costs 4x the
     upstream work (and caching 100 TB is not an option); re-reading the
@@ -227,9 +160,12 @@ def ingest_and_store(
     reference's chunk file feeding every uploader
     (``writer/link.go:13-66``).
 
-    Bulk loads into a fresh ``root`` (points appends; the derived
-    tables rebuild from the stored points). For incremental streaming
-    use ``streaming.ingest`` (which persists each micro-batch).
+    All four tables are written by :func:`operators.layout.append_table`
+    in the month-partitioned contract layout, so a stream later started
+    on ``root`` appends to them without any layout migration. The points
+    append; the derived tables OVERWRITE from the full stored points
+    (bulk-load semantics; idempotent w.r.t. the replacing-dedup read
+    views). For incremental streaming use ``streaming.ingest``.
     """
     config = config or IngestConfig()
     spark = points.sparkSession
@@ -243,59 +179,16 @@ def ingest_and_store(
     kept = points.filter(keep).filter(
         ignored_patterns_predicate(config.ignored_patterns)
     )
-    (
-        kept.withColumn("month", F.date_format("date", "yyyyMM"))
-        .sortWithinPartitions("month", "path", "time")
-        .write.mode("append")
-        .partitionBy("month")
-        .parquet(os.path.join(root, "points"))
-    )
-    # derived tables rebuild from the full stored points (bulk-load
-    # semantics; idempotent w.r.t. the replacing-dedup read views)
-
-    stored = spark.read.parquet(os.path.join(root, "points")).drop("month")
-
-    def _write_reverse():
-        (
-            stored.withColumn("path", path_reverse("path"))
-            .withColumn("month", F.date_format("date", "yyyyMM"))
-            .sortWithinPartitions("month", "path", "time")
-            .write.mode("overwrite")
-            .partitionBy("month")
-            .parquet(os.path.join(root, "points_reverse"))
-        )
-
-    index_mode = "append" if exists_cache else "overwrite"
-
-    def _write_index():
-        index_df = build_index(stored, disable_daily=config.disable_daily_index)
-        if exists_cache:
-            try:
-                existing = spark.read.parquet(os.path.join(root, "index"))
-                index_df = new_series_only(
-                    index_df, existing, ["date", "level", "path"]
-                )
-            except Exception:
-                pass
-        index_df.sortWithinPartitions("path").write.mode(index_mode).parquet(
-            os.path.join(root, "index")
-        )
-
-    def _write_tagged():
-        tagged_df = build_tagged(
-            stored, ignored_metrics=config.ignored_tagged_metrics
-        )
-        if exists_cache:
-            try:
-                existing_t = spark.read.parquet(os.path.join(root, "tagged"))
-                tagged_df = new_series_only(
-                    tagged_df, existing_t, ["date", "tag1", "path"]
-                )
-            except Exception:
-                pass
-        tagged_df.sortWithinPartitions("path").write.mode(index_mode).parquet(
-            os.path.join(root, "tagged")
-        )
+    points_path = os.path.join(root, "points")
+    append_table(kept, points_path, _sort_cols("points"))
+    if table_layout(spark, points_path) == "missing":
+        return  # nothing stored, nothing to derive
+    stored = spark.read.parquet(points_path).drop("month")
+    derived = {
+        "points_reverse": stored.withColumn("path", path_reverse("path")),
+        "index": build_index(stored, disable_daily=config.disable_daily_index),
+        "tagged": build_tagged(stored, ignored_metrics=config.ignored_tagged_metrics),
+    }
 
     # the three derived tables scan the same stored points independently
     # — submit them as concurrent jobs (Spark's scheduler interleaves
@@ -305,7 +198,14 @@ def ingest_and_store(
 
     with ThreadPoolExecutor(max_workers=3) as pool:
         futures = [
-            pool.submit(fn) for fn in (_write_reverse, _write_index, _write_tagged)
+            pool.submit(
+                append_table,
+                df,
+                os.path.join(root, name),
+                _sort_cols(name),
+                "overwrite",
+            )
+            for name, df in derived.items()
         ]
         for f in futures:
             f.result()

@@ -35,7 +35,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..pipeline import IngestConfig, derive_tables
 from ..operators.dedup import new_series_only
-from ..operators.layout import forget_layout, prepare_partitioned_append
+from ..operators.layout import append_table
 from ..operators.filters import drop_rule_predicate
 from ..sources.plain import parse_plain_lines
 from ..functions.tags import TagConfig
@@ -94,17 +94,6 @@ _TABLE_WRITE_LOCKS_GUARD = threading.Lock()
 def _table_lock(path: str) -> threading.Lock:
     with _TABLE_WRITE_LOCKS_GUARD:
         return _TABLE_WRITE_LOCKS[os.path.abspath(path)]
-
-
-# series tables that have provably held rows this process (a prior
-# non-empty write landed): their per-batch head(1) emptiness probe is
-# pure overhead — an empty month-partitioned append to an established
-# table writes no data files (the dynamic-partition writer creates
-# files on first row) and only refreshes _SUCCESS, whereas on a table
-# that might not exist yet the probe still guards against creating an
-# unreadable _SUCCESS-only directory (r12 optimization; see
-# _write_series).
-_ESTABLISHED_TABLES: set[str] = set()
 
 
 @dataclass
@@ -296,31 +285,7 @@ def start_ingest(
             def _write_points(name):
                 path = os.path.join(config.root, name)
                 with _table_lock(path):
-                    # same legacy-layout guard as the series tables:
-                    # a hand-built / pre-partitioning flat points dir
-                    # must be migrated before the first month= append
-                    # or its rows go dark (memoized one-RPC probe; no
-                    # pin needed — the points frame derives from the
-                    # batch, never from the stored table)
-                    if not prepare_partitioned_append(
-                        spark_b, path, ("path", "time")
-                    )[0]:
-                        tables[name].sortWithinPartitions(
-                            "path", "time"
-                        ).write.mode("append").parquet(path)
-                    else:
-                        try:
-                            (
-                                tables[name]
-                                .withColumn("month", F.date_format("date", "yyyyMM"))
-                                .sortWithinPartitions("month", "path", "time")
-                                .write.mode("append")
-                                .partitionBy("month")
-                                .parquet(path)
-                            )
-                        except Exception:
-                            forget_layout(path)
-                            raise
+                    append_table(tables[name], path, ("path", "time"))
                 if ch is not None:
                     from ..sinks.clickhouse import insert_points
 
@@ -340,136 +305,41 @@ def start_ingest(
                     df = _anti_existing(
                         spark_b, df, config.root, name, keys, _batch_dates()
                     )
+                path = os.path.join(config.root, name)
                 # legacy tree/series tables mirror to CH only when the
                 # config names a table for them (ch_names carries just
                 # the four modern types by default)
-                mirror = ch is not None and name in ch_names
-                path = os.path.join(config.root, name)
-                # steady-state fast path (r12): once the table has
-                # provably held rows, the write job is the ONLY
-                # consumer (no mirror upload) — skip the persist and
-                # the head(1) emptiness probe (one extra Spark job
-                # per series table per micro-batch). An all-deduped
-                # batch then appends zero data files to the
-                # established month-partitioned table (only _SUCCESS
-                # is rewritten). Date-less legacy flat tables fall
-                # through to the probing path: an empty FLAT append
-                # would create one empty part file per task.
-                if (
-                    not mirror
-                    and "date" in df.columns
-                    and os.path.abspath(path) in _ESTABLISHED_TABLES
-                ):
+                if ch is None or name not in ch_names:
                     with _table_lock(path):
-                        partitioned_ok, pinned = (
-                            prepare_partitioned_append(
-                                spark_b, path, ("path",), pin=df
-                            )
-                        )
-                        if pinned is not None:
-                            df = pinned
-                        if partitioned_ok:
-                            try:
-                                (
-                                    df.withColumn(
-                                        "month",
-                                        F.date_format("date", "yyyyMM"),
-                                    )
-                                    .sortWithinPartitions("month", "path")
-                                    .write.mode("append")
-                                    .partitionBy("month")
-                                    .parquet(path)
-                                )
-                            except Exception:
-                                # unknown directory state: next batch
-                                # must re-probe layout AND emptiness
-                                forget_layout(path)
-                                _ESTABLISHED_TABLES.discard(
-                                    os.path.abspath(path)
-                                )
-                                raise
-                            return
-                    # legacy flat layout: probing path below
-                # pin the deduped rows: reused by the emptiness probe,
-                # the parquet append, and (for mirrors) the CH upload
-                # — and re-evaluating the anti-join after the write
-                # would see the just-appended rows and go empty
+                        append_table(df, path, ("path",))
+                    return
+                # pin the deduped rows for the mirror: re-evaluating the
+                # anti-join after the write would see the just-appended
+                # rows and go empty
                 df = df.persist()
                 try:
-                    # a PARTITIONED append of an empty frame writes a
-                    # directory holding only _SUCCESS — unreadable
-                    # (UNABLE_TO_INFER_SCHEMA) — so an all-deduped
-                    # batch writes nothing at all
-                    has_rows = bool(df.head(1))
                     with _table_lock(path):
-                        # probe the stored layout first: a partitioned
-                        # append onto a legacy FLAT table would make
-                        # the directory mixed, and Spark then silently
-                        # drops the flat rows from every read —
-                        # migrate the legacy files into month=
-                        # partitions once (memoized after that).
-                        # `pin=df`: the anti-join above lazily reads
-                        # the very files the migration rewrites
-                        partitioned_ok = False
-                        if has_rows and "date" in df.columns:
-                            partitioned_ok, pinned = (
-                                prepare_partitioned_append(
-                                    spark_b, path, ("path",), pin=df
-                                )
-                            )
-                            if pinned is not None:
-                                df.unpersist()
-                                df = pinned
-                        if partitioned_ok:
-                            # month(date) partitioning, matching the
-                            # batch writer and the reference's
-                            # PARTITION BY toYYYYMM(Date) DDL — the A2
-                            # anti-join's date prune then partition-
-                            # prunes structurally (legacy `tree` has
-                            # no date and stays flat)
-                            try:
-                                (
-                                    df.withColumn(
-                                        "month",
-                                        F.date_format("date", "yyyyMM"),
-                                    )
-                                    .sortWithinPartitions("month", "path")
-                                    .write.mode("append")
-                                    .partitionBy("month")
-                                    .parquet(path)
-                                )
-                            except Exception:
-                                # a failed write leaves the dir in an
-                                # unknown state — re-probe next batch
-                                forget_layout(path)
-                                raise
-                        elif has_rows:
-                            df.write.mode("append").parquet(path)
-                    if has_rows:
-                        # the table now provably holds rows: later
-                        # batches take the probe-free fast path above
-                        _ESTABLISHED_TABLES.add(os.path.abspath(path))
-                    if mirror:
-                        # same deduped rows as the parquet write: the
-                        # A2 exists-cache throttles the CH upload
-                        # exactly like the reference's cached uploader
-                        # (uploader/cached.go:63-112)
-                        from ..sinks.clickhouse import insert_index, insert_tagged
+                        written = append_table(df, path, ("path",))
+                    # same deduped rows as the parquet write: the A2
+                    # exists-cache throttles the CH upload exactly like
+                    # the reference's cached uploader
+                    # (uploader/cached.go:63-112)
+                    from ..sinks.clickhouse import insert_index, insert_tagged
 
-                        fn = insert_index if name == "index" else insert_tagged
-                        n = (
-                            df.count()
-                            if config.collector is not None
-                            else None  # cheap: df is persisted above
-                        )
-                        _timed_upload(
-                            ch_names[name],
-                            n,
-                            lambda: fn(
-                                df, ch.base_url, ch_names[name],
-                                **_ch_kwargs(),
-                            ),
-                        )
+                    fn = insert_index if name == "index" else insert_tagged
+                    n = (
+                        written.count()
+                        if config.collector is not None
+                        else None  # cheap: the rows are persisted
+                    )
+                    _timed_upload(
+                        ch_names[name],
+                        n,
+                        lambda: fn(
+                            written, ch.base_url, ch_names[name],
+                            **_ch_kwargs(),
+                        ),
+                    )
                 finally:
                     df.unpersist()
 

@@ -142,6 +142,67 @@ def test_ingest_and_store_bulk(spark, tmp_path):
     assert {r.tag1 for r in tg.collect()} == {"__name__=x", "env=p"}
 
 
+def test_ingest_and_store_writes_contract_layout(spark, tmp_path, monkeypatch):
+    """The bulk loader writes all four tables month-partitioned, so a
+    compaction keeps that layout and a stream later started on the root
+    appends without migrating anything (flat dirs are what the layout
+    guard treats as an older build's, migrating them on first append)."""
+    from carbon_clickhouse_spark.operators import layout as layout_mod
+    from carbon_clickhouse_spark.pipeline import IngestConfig, ingest_and_store
+    from carbon_clickhouse_spark.sources.plain import parse_plain_lines
+    from carbon_clickhouse_spark.streaming.ingest import (
+        StreamConfig,
+        file_landing_source,
+        start_plain_ingest,
+    )
+
+    lines = spark.createDataFrame(
+        [("a.b.c 1.5 1625478240",), ("x;env=p 2.5 1625478300",)], ["line"]
+    )
+    root = str(tmp_path / "t")
+    ingest_and_store(
+        parse_plain_lines(lines, now=1625478400), root, IngestConfig(now=1625478400)
+    )
+    tables = ("points", "points_reverse", "index", "tagged")
+    for name in tables:
+        assert layout_mod.table_layout(spark, f"{root}/{name}") == "partitioned"
+    compact_replacing(spark, f"{root}/index", ["date", "level", "path"])
+    assert layout_mod.table_layout(spark, f"{root}/index") == "partitioned"
+
+    # a stream in a fresh process: no memoized verdicts
+    with layout_mod._KNOWN_LOCK:
+        layout_mod._KNOWN_PARTITIONED.clear()
+        layout_mod._KNOWN_FLAT.clear()
+    migrations = []
+    real_migrate = layout_mod.migrate_flat_to_partitioned
+
+    def counting_migrate(spark_, path, *args, **kwargs):
+        migrations.append(path)
+        return real_migrate(spark_, path, *args, **kwargs)
+
+    monkeypatch.setattr(
+        layout_mod, "migrate_flat_to_partitioned", counting_migrate
+    )
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    (landing / "c1.txt").write_text("fresh.d.e 3.0 1625478360\n")
+    cfg = StreamConfig(
+        root=root, chunk_interval="500 milliseconds", ingest=IngestConfig(now=1625478400)
+    )
+    q = start_plain_ingest(spark, file_landing_source(spark, str(landing)), cfg)
+    try:
+        q.processAllAvailable()
+        assert q.exception() is None
+    finally:
+        q.stop()
+    assert migrations == []
+    for name in tables:
+        assert layout_mod.table_layout(spark, f"{root}/{name}") == "partitioned"
+    idx = spark.read.parquet(f"{root}/index")
+    assert idx.filter(idx.path == "fresh.d.e").count() == 2
+    assert idx.filter(idx.path == "a.b.c").count() == 2
+
+
 def test_compact_rollup_incremental_month_selection(spark, tmp_path):
     """Auto month selection: the first run compacts everything and
     records per-month post-rewrite mtimes; an immediately repeated

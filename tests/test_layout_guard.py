@@ -1,11 +1,12 @@
 """Legacy flat-layout append guard (upgrade-path correctness).
 
-Pre-round-7 builds wrote index/tagged as FLAT parquet; round 7
-switched every date-carrying table to ``month=`` partitioning. Spark's
-parquet reader, given a directory mixing flat data files with
-partition directories, silently returns ONLY the partitioned rows —
-so an unguarded partitioned append onto a legacy table loses all
-pre-upgrade history from every read. These tests pin the guard:
+Every writer of this build writes the date-carrying tables
+``month=``-partitioned; a FLAT table directory comes only from an
+older build (which wrote index/tagged flat) or from a hand-written
+dir. Spark's parquet reader, given a directory mixing flat data files
+with partition directories, silently returns ONLY the partitioned
+rows — so an unguarded partitioned append onto such a table loses all
+of its history from every read. These tests pin the guard:
 probe-and-migrate before the first partitioned append
 (``operators/layout.py``), in both the batch writer
 (``pipeline.write_tables``) and the streaming writer

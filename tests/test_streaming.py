@@ -1302,12 +1302,11 @@ def test_established_table_fast_path_skips_probe_and_handles_empty(
     """r12 optimization pin: once a series table holds rows, later
     batches skip the head(1) emptiness probe and append directly —
     an ALL-DUPLICATE batch (anti-join empties it) must add zero data
-    files to the established table and leave every read intact."""
+    files to the established table and leave every read intact. The
+    mark is the table writer's one memo (``layout._KNOWN_PARTITIONED``)."""
     import glob
 
-    from carbon_clickhouse_spark.streaming.ingest import (
-        _ESTABLISHED_TABLES,
-    )
+    from carbon_clickhouse_spark.operators import layout as layout_mod
 
     landing = tmp_path / "landing"
     landing.mkdir()
@@ -1329,7 +1328,8 @@ def test_established_table_fast_path_skips_probe_and_handles_empty(
         q.processAllAvailable()
         assert q.exception() is None
         idx = os.path.abspath(f"{root}/index")
-        assert idx in _ESTABLISHED_TABLES  # first write marked it
+        with layout_mod._KNOWN_LOCK:  # first write marked it
+            assert idx in layout_mod._KNOWN_PARTITIONED
         files_before = sorted(glob.glob(f"{root}/index/**/*.parquet",
                                         recursive=True))
         # the SAME lines again: the A2 anti-join empties the index /
@@ -1355,3 +1355,44 @@ def test_established_table_fast_path_skips_probe_and_handles_empty(
     assert index.filter(
         F.col("path") == "est.host3.cpu"
     ).count() > 0
+
+
+def test_empty_first_batch_leaves_points_tables_readable(spark, tmp_path):
+    """A fresh root whose first landed chunk holds only malformed lines
+    used to get an empty PARTITIONED append: points/ and
+    points_reverse/ held only _SUCCESS and every read failed with
+    UNABLE_TO_INFER_SCHEMA until a later batch landed rows. An empty
+    batch must write nothing; the next valid batch lands normally."""
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    root = str(tmp_path / "tables")
+    cfg = StreamConfig(
+        root=root,
+        chunk_interval="500 milliseconds",
+        ingest=IngestConfig(now=1625478400),
+    )
+    q = start_plain_ingest(spark, file_landing_source(spark, str(landing)), cfg)
+    try:
+        (landing / "c1.txt").write_text(
+            "no.value.here\nbad.float abc 1625478240\nbad.ts 1.0 xyz\n"
+        )
+        q.processAllAvailable()
+        assert q.exception() is None
+        for name in ("points", "points_reverse", "index", "tagged"):
+            path = f"{root}/{name}"
+            if os.path.exists(path):
+                assert spark.read.parquet(path).count() == 0
+        (landing / "c2.txt").write_text("ok.host1.cpu 1.5 1625478240\n")
+        q.processAllAvailable()
+        assert q.exception() is None
+    finally:
+        q.stop()
+
+    assert [r.path for r in spark.read.parquet(f"{root}/points").collect()] == [
+        "ok.host1.cpu"
+    ]
+    assert [
+        r.path for r in spark.read.parquet(f"{root}/points_reverse").collect()
+    ] == ["cpu.host1.ok"]
+    index = spark.read.parquet(f"{root}/index")
+    assert index.filter(F.col("path") == "ok.host1.cpu").count() > 0
