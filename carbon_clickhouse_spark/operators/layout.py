@@ -60,6 +60,7 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "append_table",
+    "table_sort_cols",
     "table_layout",
     "prepare_partitioned_append",
     "migrate_flat_to_partitioned",
@@ -243,9 +244,16 @@ def prepare_partitioned_append(
     return ok, pinned
 
 
+def table_sort_cols(table: str) -> tuple[str, ...]:
+    """A table's sort key within each ``month=`` partition — the CH
+    ORDER BY key: ``(path, time)`` for the points tables, ``path``
+    alone for the series tables (index, tagged, legacy tree/series)."""
+    return ("path", "time") if table.startswith("points") else ("path",)
+
+
 def append_table(
     df: DataFrame, path: str, sort_cols: tuple[str, ...], mode: str = "append"
-) -> DataFrame:
+) -> None:
     """Write ``df`` to the table at ``path`` in the contract layout —
     the one writer behind every table write of the batch, bulk and
     streaming paths (callers sharing a table across threads hold its
@@ -257,44 +265,56 @@ def append_table(
       a missing table as empty). An append decides that with a
       ``head(1)`` probe, run only while the table is not known
       partitioned with rows — after that (the streaming steady state)
-      an empty append simply writes no data files. An overwrite needs
-      no probe: it truncates, and a ``_SUCCESS``-only result is then
-      deleted (one listing, not a second evaluation of the frame).
+      an empty append simply writes no data files. While the probe
+      runs, ``df`` is persisted for the call so the probe and the write
+      share one evaluation (an A2 anti-join is a shuffle). An overwrite
+      needs no probe: it truncates, and a ``_SUCCESS``-only result is
+      then deleted (one listing, not a second evaluation of the frame).
     * before appending onto a flat dir (older build / hand-written),
       :func:`prepare_partitioned_append` migrates it, pinning ``df``
       first because its plan may read the files being migrated (the
-      A2 anti-join). A date-less frame, or a date-less flat dir, is
-      written flat to match.
+      A2 anti-join); the pinned copy is written, then released. A
+      caller that reads the rows again after the write (the ClickHouse
+      mirror) persists ``df`` beforehand: the pin fills that cache, so
+      ``df`` never re-reads the migrated files. A date-less frame, or
+      a date-less flat dir, is written flat to match.
     * a failed write drops the memo (:func:`forget_layout`): the dir
-      may be in any state, so the next append re-probes.
-
-    Returns the frame written — ``df``, or its pinned copy when a
-    migration ran; anything reading the rows after the write (the
-    ClickHouse mirror) must use it."""
+      may be in any state, so the next append re-probes."""
     spark = df.sparkSession
     key = _memo_key(path)
     partitioned = "date" in df.columns
-    if mode == "overwrite":
-        forget_layout(path)  # the whole dir is replaced
-    else:
-        with _KNOWN_LOCK:
-            known = partitioned and key in _KNOWN_PARTITIONED
-        if not known and not df.head(1):
-            return df
-        if partitioned:
-            partitioned, pinned = prepare_partitioned_append(
-                spark, path, sort_cols, pin=df
-            )
-            if pinned is not None:
-                df = pinned
+    owned = pinned = None
     try:
-        if partitioned:
-            _write_partitioned(df, path, sort_cols, mode)
+        if mode == "overwrite":
+            forget_layout(path)  # the whole dir is replaced
         else:
-            df.sortWithinPartitions(*sort_cols).write.mode(mode).parquet(path)
-    except Exception:
-        forget_layout(path)
-        raise
+            with _KNOWN_LOCK:
+                known = partitioned and key in _KNOWN_PARTITIONED
+            if not known:
+                if not df.is_cached:
+                    owned = df.persist()
+                if not df.head(1):
+                    return
+            if partitioned:
+                partitioned, pinned = prepare_partitioned_append(
+                    spark, path, sort_cols, pin=df
+                )
+        out = df if pinned is None else pinned
+        try:
+            if partitioned:
+                _write_partitioned(out, path, sort_cols, mode)
+            else:
+                out.sortWithinPartitions(*sort_cols).write.mode(mode).parquet(path)
+        except Exception:
+            forget_layout(path)
+            raise
+    finally:
+        if owned is not None:
+            owned.unpersist()
+        if pinned is not None:
+            # DataFrame.unpersist() does not reach a localCheckpoint:
+            # its blocks belong to the RDD behind the LogicalRDD plan
+            pinned._jdf.queryExecution().analyzed().rdd().unpersist(False)
     if partitioned:
         if mode == "overwrite" and table_layout(spark, path) == "missing":
             fs, jpath = _fs_and_path(spark, path)
@@ -302,25 +322,3 @@ def append_table(
         else:
             with _KNOWN_LOCK:
                 _KNOWN_PARTITIONED.add(key)
-    return df
-    if mode == "overwrite":
-        # replaces the whole dir: any earlier verdict is void
-        forget_layout(path)
-    elif partitioned:
-        partitioned, pinned = prepare_partitioned_append(
-            spark, path, sort_cols, pin=df
-        )
-        if pinned is not None:
-            df = pinned
-    try:
-        if partitioned:
-            _write_partitioned(df, path, sort_cols, mode)
-        else:
-            df.sortWithinPartitions(*sort_cols).write.mode(mode).parquet(path)
-    except Exception:
-        forget_layout(path)
-        raise
-    if partitioned:
-        with _KNOWN_LOCK:
-            _KNOWN_PARTITIONED.add(key)
-    return df

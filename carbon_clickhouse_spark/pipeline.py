@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from .operators.filters import drop_rule_predicate, ignored_patterns_predicate
 from .operators.index import build_index
-from .operators.layout import append_table, table_layout
+from .operators.layout import append_table, table_layout, table_sort_cols
 from .operators.tagged import build_tagged
 from .functions.paths import path_reverse
 
@@ -75,12 +75,6 @@ def derive_tables(points: DataFrame, config: IngestConfig | None = None) -> dict
     return tables
 
 
-def _sort_cols(table: str) -> tuple[str, ...]:
-    # the CH ORDER BY key: the series tables (index, tagged, legacy
-    # tree/series) sort by path alone
-    return ("path", "time") if table.startswith("points") else ("path",)
-
-
 def write_tables(
     tables: dict[str, DataFrame],
     root: str,
@@ -100,7 +94,7 @@ def write_tables(
     first: only series not already present are then appended.
     """
     for name, df in tables.items():
-        append_table(df, os.path.join(root, name), _sort_cols(name), mode)
+        append_table(df, os.path.join(root, name), table_sort_cols(name), mode)
 
 
 def write_tables_bucketed(
@@ -180,7 +174,7 @@ def ingest_and_store(
         ignored_patterns_predicate(config.ignored_patterns)
     )
     points_path = os.path.join(root, "points")
-    append_table(kept, points_path, _sort_cols("points"))
+    append_table(kept, points_path, table_sort_cols("points"))
     if table_layout(spark, points_path) == "missing":
         return  # nothing stored, nothing to derive
     stored = spark.read.parquet(points_path).drop("month")
@@ -202,7 +196,7 @@ def ingest_and_store(
                 append_table,
                 df,
                 os.path.join(root, name),
-                _sort_cols(name),
+                table_sort_cols(name),
                 "overwrite",
             )
             for name, df in derived.items()

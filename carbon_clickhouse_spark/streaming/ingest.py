@@ -35,7 +35,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..pipeline import IngestConfig, derive_tables
 from ..operators.dedup import new_series_only
-from ..operators.layout import append_table
+from ..operators.layout import append_table, table_sort_cols
 from ..operators.filters import drop_rule_predicate
 from ..sources.plain import parse_plain_lines
 from ..functions.tags import TagConfig
@@ -285,7 +285,7 @@ def start_ingest(
             def _write_points(name):
                 path = os.path.join(config.root, name)
                 with _table_lock(path):
-                    append_table(tables[name], path, ("path", "time"))
+                    append_table(tables[name], path, table_sort_cols(name))
                 if ch is not None:
                     from ..sinks.clickhouse import insert_points
 
@@ -311,15 +311,16 @@ def start_ingest(
                 # the four modern types by default)
                 if ch is None or name not in ch_names:
                     with _table_lock(path):
-                        append_table(df, path, ("path",))
+                        append_table(df, path, table_sort_cols(name))
                     return
                 # pin the deduped rows for the mirror: re-evaluating the
                 # anti-join after the write would see the just-appended
-                # rows and go empty
+                # rows and go empty (and a layout migration would have
+                # deleted the files it read)
                 df = df.persist()
                 try:
                     with _table_lock(path):
-                        written = append_table(df, path, ("path",))
+                        append_table(df, path, table_sort_cols(name))
                     # same deduped rows as the parquet write: the A2
                     # exists-cache throttles the CH upload exactly like
                     # the reference's cached uploader
@@ -328,7 +329,7 @@ def start_ingest(
 
                     fn = insert_index if name == "index" else insert_tagged
                     n = (
-                        written.count()
+                        df.count()
                         if config.collector is not None
                         else None  # cheap: the rows are persisted
                     )
@@ -336,7 +337,7 @@ def start_ingest(
                         ch_names[name],
                         n,
                         lambda: fn(
-                            written, ch.base_url, ch_names[name],
+                            df, ch.base_url, ch_names[name],
                             **_ch_kwargs(),
                         ),
                     )
